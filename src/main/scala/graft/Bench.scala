@@ -64,12 +64,18 @@ object Bench {
     }
     val warmDir = "/root/testdata/sf0.001"
     spark.range(100000).selectExpr("sum(id)").collect()
-    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
-      selected.foreach { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
+    if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
+      // a warm-up failure does not stop the bench, but it is named on
+      // stderr (stdout stays the JSON contract): a query that fails only
+      // at the warm-up SF would otherwise go unseen
+      val warmFailed = selected.filterNot { case (_, fn) =>
+        val ok = try { fn(spark, warmDir).count(); true } catch { case _: Throwable => false }
         releaseResidue()
-      }
-    else spark.read.parquet(s"$sfDir/region.parquet").count()
+        ok
+      }.map(_._1)
+      if (warmFailed.nonEmpty)
+        System.err.println(s"[bench] warm-up failed: ${warmFailed.mkString(",")}")
+    } else spark.read.parquet(s"$sfDir/region.parquet").count()
     // Two timed runs per query, report the min: the first timed run at
     // the target SF still pays one-off costs (row-group footer reads,
     // AQE stage re-plans, JIT tiering); the min is the steady-state

@@ -189,7 +189,7 @@ object QueriesExtra {
       val t = "D.S.EVO"
       cat.append(t, sup.filter(col("s_suppkey") % 2 === 0)
         .select("s_suppkey", "s_name"))
-      cat.appendEvolving(t, sup.filter(col("s_suppkey") % 2 === 1)
+      cat.append(t, sup.filter(col("s_suppkey") % 2 === 1)
         .select(col("s_suppkey"), col("s_name"),
           col("s_nationkey").cast("long").as("nation")))
       cat.readMergedSchema(t)

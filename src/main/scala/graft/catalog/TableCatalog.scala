@@ -890,15 +890,10 @@ class TableCatalog(spark: SparkSession, root: String,
   /** The live committed version number (None = table absent). */
   def version(fq: String): Option[Int] = currentVersion(fq)
 
-  /** Append rows whose schema may add columns relative to the table:
-    * the read side resolves the union schema (absent columns read as
-    * null). Opt-in — evolving reads resolve one footer per chain
-    * version at planning time, so the default `read` path stays
-    * fixed-schema. */
-  def appendEvolving(fq: String, df: DataFrame): Unit = append(fq, df)
-
-  /** Read resolving the union of all file schemas in the chain
-    * (for tables grown via [[appendEvolving]]). */
+  /** Read resolving the union of all file schemas in the chain (for
+    * tables grown by appends whose rows add columns; absent columns read
+    * as null). Opt-in — it resolves one footer per chain version at
+    * planning time, so the default `read` path stays fixed-schema. */
   def readMergedSchema(fq: String): DataFrame = currentVersion(fq) match {
     case Some(v) if partitionColsOf(fq, v).nonEmpty =>
       // per-version partition discovery (bare leaf files would silently
@@ -2476,9 +2471,6 @@ class TableCatalog(spark: SparkSession, root: String,
     * rewritten rows into the stream. */
   def versionGlob(fq: String): String = new Path(tableDir(fq), "v_*").toString
 
-  /** Append a single metadata/log row (log-table writer W7). */
-  def appendRow(fq: String, row: DataFrame): Unit = append(fq, row)
-
   // ---- DataSource V2 connector surface (graft.connector) ------------------
   // Planning-time metadata reads for [[graft.connector.GraftSource]]:
   // the connector resolves versions, file lists, `_STATS` intervals,
@@ -3042,7 +3034,7 @@ class TableCatalog(spark: SparkSession, root: String,
 
   /** ALTER TABLE ADD COLUMNS: declare new nullable columns without
     * touching a data byte — existing rows read them as NULL, the next
-    * append may carry them (the SQL face of [[appendEvolving]]).
+    * append may carry them (the SQL face of an evolving [[append]]).
     * Same-name columns (footer or declared) are rejected. A logical
     * name that was EVER used as a physical in this chain (a dropped
     * column, a rename source) gets a fresh physical name — re-adding

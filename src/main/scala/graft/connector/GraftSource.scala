@@ -1021,7 +1021,7 @@ object GraftSource {
   /** Table schema for a connector read: ONE representative footer per
     * owning version directory (files of one commit share a schema —
     * they come out of a single writing job), UNIONED across the chain.
-    * A table grown via `appendEvolving` thus exposes every column
+    * A table grown by column-adding appends thus exposes every column
     * (files lacking one read it as null, matching
     * `TableCatalog.readMergedSchema`), and a same-name TYPE conflict
     * fails loudly at planning time instead of erroring mid-scan or

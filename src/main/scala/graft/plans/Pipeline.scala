@@ -17,17 +17,28 @@ final case class RunContext(
   def newLogId(): String = UUID.randomUUID().toString
 }
 
-/** Append-only run/step logging to a catalog log table (W7).
+/** One step line of an [[IngestLog]]. */
+final case class LogLine(practice: String, fileType: String, step: String,
+    status: String, rowCount: Long, error: String)
+
+/** Append-only run/step logging to a catalog log table (W7). Each
+  * `logAll` call is one catalog append, i.e. one table version: a stage
+  * that emits many lines (precheck: one per check per file) hands them
+  * over together, so a stage run costs one log commit, not one per line.
   * reference: RAW_ADLS_TO_RAW_SNOWFLAKE.py:316-382 (+3 variants). */
 final class IngestLog(spark: SparkSession, catalog: TableCatalog, logTable: String) {
   def log(ctx: RunContext, practice: String, fileType: String, step: String,
-      status: String, rowCount: Long = -1, error: String = ""): Unit = {
+      status: String, rowCount: Long = -1, error: String = ""): Unit =
+    logAll(ctx, Seq(LogLine(practice, fileType, step, status, rowCount, error)))
+
+  /** Every line in ONE append; each row gets its own `LOG_ID`. */
+  def logAll(ctx: RunContext, lines: Seq[LogLine]): Unit = if (lines.nonEmpty) {
     import spark.implicits._
-    val row = Seq((ctx.newLogId(), ctx.parentRunId, practice, fileType, step,
-      status, rowCount, error, new java.sql.Timestamp(System.currentTimeMillis())))
+    val rows = lines.map(l => (ctx.newLogId(), ctx.parentRunId, l.practice, l.fileType,
+      l.step, l.status, l.rowCount, l.error, new java.sql.Timestamp(System.currentTimeMillis())))
       .toDF("LOG_ID", "PARENT_RUN_ID", "PRACTICE_NAME", "FILE_TYPE",
         "STEP_NAME", "STATUS", "ROW_COUNT", "ERROR_MESSAGE", "LOG_TIME")
-    catalog.append(logTable, row)
+    catalog.append(logTable, rows)
   }
 }
 
@@ -257,7 +268,9 @@ final class CuratedStage(spark: SparkSession, catalog: TableCatalog,
 
 /** Precheck gate over staged files: per-file validation battery; FAIL
   * moves the file to the error dir (with the `_PRI_{runId}` rename) and
-  * blocks ingest for the whole drop.
+  * blocks ingest for the whole drop. Every check line of a run goes to
+  * the log in one log commit per stage run, landed before any error move
+  * or notice, so a failed drop's verdict is logged even if a move throws.
   * reference: SF_Notebooks/ADLS_FILE_PRECHECK.py:1172-1247. */
 final class PrecheckStage(spark: SparkSession, log: Option[IngestLog] = None) {
   import graft.precheck.{CheckResult, Precheck}
@@ -289,25 +302,29 @@ final class PrecheckStage(spark: SparkSession, log: Option[IngestLog] = None) {
     if (files.isEmpty) return (true, Map.empty)
     // ONE Spark job for every file's line count (the old shape ran two
     // sequential jobs PER FILE — 2 000 jobs for a thousand-file drop);
-    // the 7-line heads are direct store reads, no job at all
-    val totals = spark.read.textFile(files.map(_.path): _*)
-      .groupBy(input_file_name().as("f")).count()
-      .collect()
-      .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath
-        -> r.getLong(1)).toMap
-    val heads = graft.util.Concurrent.forEach(files, 16)(
+    // the 7-line heads are direct store reads, no job at all. Empty
+    // files are read by neither (a 0-byte .gz is no gzip stream, so the
+    // codec would throw): they reach the battery with no lines and fail
+    // its file_size check.
+    val nonEmpty = files.filter(_.size > 0)
+    val totals =
+      if (nonEmpty.isEmpty) Map.empty[String, Long]
+      else spark.read.textFile(nonEmpty.map(_.path): _*)
+        .groupBy(input_file_name().as("f")).count()
+        .collect()
+        .map(r => new org.apache.hadoop.fs.Path(r.getString(0)).toUri.getPath
+          -> r.getLong(1)).toMap
+    val heads = graft.util.Concurrent.forEach(nonEmpty, 16)(
       f => f.path -> readHead(f.path, 7)).toMap
     val results = files.map { f =>
-      val lines = heads(f.path)
+      val lines = heads.getOrElse(f.path, Nil)
       val total = totals.getOrElse(
         new org.apache.hadoop.fs.Path(f.path).toUri.getPath, 0L)
-      val checks = Precheck.checkFile(f.name, f.size, lines, total, delimiter, pc)
-      checks.foreach { c =>
-        log.foreach(_.log(ctx, practice, spec.fileType, s"PRECHECK:${c.checkName}",
-          c.status, -1, c.details))
-      }
-      f -> checks
+      f -> Precheck.checkFile(f.name, f.size, lines, total, delimiter, pc)
     }
+    log.foreach(_.logAll(ctx, for ((_, checks) <- results; c <- checks)
+      yield LogLine(practice, spec.fileType, s"PRECHECK:${c.checkName}",
+        c.status, -1, c.details)))
     val failed = results.filter(_._2.exists(_.failed))
     failed.foreach { case (f, _) =>
       errorDir.foreach(ed => ArchiveMover.moveToError(spark, f.path, ed, ctx.parentRunId))

@@ -291,11 +291,11 @@ class CatalogSpec extends SparkTestBase {
     intercept[IllegalArgumentException](cat.readVersion(t, 7))
   }
 
-  test("appendEvolving + readMergedSchema resolves the union schema") {
+  test("column-adding append + readMergedSchema resolves the union schema") {
     val cat = new TableCatalog(spark, tempDir("cat"))
     val t = "d.s.evolve"
     cat.append(t, Seq((1, "a")).toDF("id", "v"))
-    cat.appendEvolving(t, Seq((2, "b", 9.5)).toDF("id", "v", "score"))
+    cat.append(t, Seq((2, "b", 9.5)).toDF("id", "v", "score"))
     val merged = cat.readMergedSchema(t)
     assert(merged.columns.toSet == Set("id", "v", "score"))
     val rows = merged.select("id", "score").as[(Int, Option[Double])]

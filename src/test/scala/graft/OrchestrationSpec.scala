@@ -128,6 +128,50 @@ class OrchestrationSpec extends SparkTestBase {
     assert(!Files.exists(Paths.get(stage, "good.csv")))
   }
 
+  test("precheck stage writes all of a run's check lines in one log commit") {
+    val cat = new TableCatalog(spark, tempDir("wh"))
+    val logTable = "LOGDB.S.PRECHECK_INGEST_LOG"
+    val log = new IngestLog(spark, cat, logTable)
+    val stage = tempDir("stage")
+    writeFile(stage, "a.csv", "id,name\n1,a\n2,b\n")
+    writeFile(stage, "b.csv", "id,name\n3,c\n4,d\n")
+    writeFile(stage, "c.csv", "id,wrong_col\n5,e\n6,f\n")
+    val spec = IngestConfig.parse(gatedConfig).practices.head.ingest.head
+    log.log(RunContext(), "p", "F", "RAW_LOAD", "SUCCESS", 1) // the log table predates the run
+    val v0 = cat.version(logTable).get
+    val ctx = RunContext()
+    val (ok, checks) = new PrecheckStage(spark, Some(log))
+      .run(ctx, "p", spec, stage, Some(tempDir("err")))
+    assert(!ok && checks.keySet == Set("a.csv", "b.csv", "c.csv"))
+    assert(cat.version(logTable).contains(v0 + 1))
+    val rows = cat.read(logTable).filter(col("PARENT_RUN_ID") === ctx.parentRunId)
+      .select("LOG_ID", "STEP_NAME", "STATUS").as[(String, String, String)].collect()
+    assert(rows.length == checks.values.map(_.size).sum)
+    assert(rows.map(_._1).distinct.length == rows.length)
+    assert(rows.forall(_._2.startsWith("PRECHECK:")))
+    assert(rows.map(r => (r._2, r._3)).sorted.toSeq == checks.values.flatten
+      .map(c => (s"PRECHECK:${c.checkName}", c.status)).toSeq.sorted)
+  }
+
+  test("precheck stage fails an empty .gz file instead of throwing") {
+    val stage = tempDir("stage")
+    val errDir = tempDir("err")
+    writeFile(stage, "good.csv", "id,name\n1,a\n2,b\n")
+    Files.write(Paths.get(stage, "x.txt.gz"), Array.emptyByteArray)
+    val base = IngestConfig.parse(gatedConfig).practices.head.ingest.head
+    val spec = base.copy(source =
+      base.source.copy(filePattern = Some(".*\\.(csv|txt\\.gz)$")))
+    val (ok, checks) = new PrecheckStage(spark)
+      .run(RunContext(), "p", spec, stage, Some(errDir))
+    assert(!ok)
+    assert(checks("x.txt.gz").map(c => c.checkName -> c.status) == Seq("file_size" -> "FAIL"))
+    assert(!checks("good.csv").exists(_.failed))
+    val moved = new java.io.File(errDir).listFiles().map(_.getName)
+      .filterNot(_.startsWith("."))
+    assert(moved.length == 1 && moved.head.startsWith("x.txt_PRI_"))
+    assert(!Files.exists(Paths.get(stage, "x.txt.gz")))
+  }
+
   test("parallel archive mover relocates a many-file drop") {
     val stage = tempDir("stage")
     val arcDir = tempDir("arc")
@@ -220,10 +264,18 @@ class OrchestrationSpec extends SparkTestBase {
     val ctx = RunContext()
     log.log(ctx, "p", "F", "RAW_LOAD", "SUCCESS", 42)
     log.log(ctx, "p", "F", "REFINED_LOAD", "SUCCESS", 40)
+    val v = cat.version("LOGDB.S.RAW_INGEST_LOG").get
+    // several lines in one call: one more table version, a row each
+    log.logAll(ctx, Seq(LogLine("p", "F", "CURATED_LOAD", "SUCCESS", 38, "NEW=38"),
+      LogLine("p", "F", "CRM_SYNC", "PARTIAL", 30, "failed=8")))
+    assert(cat.version("LOGDB.S.RAW_INGEST_LOG").contains(v + 1))
     val rows = cat.read("LOGDB.S.RAW_INGEST_LOG")
-    assert(rows.count() == 2)
-    assert(rows.filter(col("PARENT_RUN_ID") === ctx.parentRunId).count() == 2)
-    assert(rows.select("STEP_NAME").as[String].collect().toSet ==
-      Set("RAW_LOAD", "REFINED_LOAD"))
+    assert(rows.count() == 4)
+    assert(rows.filter(col("PARENT_RUN_ID") === ctx.parentRunId).count() == 4)
+    assert(rows.select("LOG_ID").distinct().count() == 4)
+    assert(rows.select("STEP_NAME", "STATUS", "ROW_COUNT", "ERROR_MESSAGE")
+      .as[(String, String, Long, String)].collect().toSet ==
+      Set(("RAW_LOAD", "SUCCESS", 42L, ""), ("REFINED_LOAD", "SUCCESS", 40L, ""),
+        ("CURATED_LOAD", "SUCCESS", 38L, "NEW=38"), ("CRM_SYNC", "PARTIAL", 30L, "failed=8")))
   }
 }
