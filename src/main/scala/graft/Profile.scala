@@ -1,50 +1,70 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 
-/** Wall-clock attribution for a query: per-Spark-job durations with
-  * call sites, plus the driver-side gap (time not covered by any job).
-  * `runMain graft.Profile <sfDir> <query> [query ...]` — two passes per
-  * query (cold, warm), breakdown printed for the warm pass.
+/** Dev diagnostics on the shared session ([[GraftSession]]):
+  * `runMain graft.Profile plan|jobs <sfDir> [query ...]` (no query
+  * names: the whole registry) or `runMain graft.Profile decode`.
   *
-  * The UI is disabled in this sandbox, so this listener is the stand-in
-  * for the guide's "open the Stages tab": it answers "is the time in
-  * jobs (executor work) or between jobs (driver planning/metadata)?"
-  * and names the code path that submitted each job.
+  *  - `plan`: each query's formatted physical plan, then the wall time
+  *    of two runs (cold, warm).
+  *  - `jobs`: wall-clock attribution for each query's warm pass —
+  *    per-Spark-job durations with call sites, the driver-side gap (time
+  *    not covered by any job) and per-stage task metrics. The session
+  *    runs without the Spark UI, so this listener stands in for its
+  *    Stages tab: it answers "is the time in jobs (executor work) or
+  *    between jobs (driver planning/metadata)?" and names the code path
+  *    that submitted each job.
+  *  - `decode`: the connector's decode paths on a DV-masked table,
+  *    vectorized (`MaskedColumnVector` survivor-map wrapping) vs the
+  *    boxed row reader — the measurement behind the COVERAGE.md claim
+  *    that keeping DV'd scans columnar is a real win. Prints
+  *    `DECODE_DV columnar=<s> row=<s> win=<x>`.
   */
 object Profile {
   private final case class JobRec(id: Int, callSite: String, desc: String,
       start: Long, var end: Long = -1L)
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // local FS without the per-file chmod fork (see GraftLocalFileSystem)
-      .config("spark.hadoop.fs.file.impl",
-        "graft.util.GraftLocalFileSystem")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Single-session driver: per-session artifact isolation (Spark 4
-      // default) routes executor-side codegen class resolution through
-      // an ExecutorClassLoader that PROBES the driver's RPC file server
-      // for every unresolved name janino tries — thread dumps of slow
-      // bench runs showed task threads serialized on that classloader
-      // monitor inside FileDownloadChannel.read while the rest of the
-      // JVM idled. No artifacts are ever added here; disable the
-      // isolation machinery so codegen resolves classes in-process.
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  def main(args: Array[String]): Unit = args.toSeq match {
+    case Seq("decode") =>
+      val spark = GraftSession.start()
+      decode(spark)
+      spark.stop()
+    case Seq(mode @ ("plan" | "jobs"), sfDir, names @ _*) =>
+      val queries = (if (names.nonEmpty) names
+        else SparkEntry.queries.keys.toSeq.sorted).map { name =>
+        name -> SparkEntry.queries.getOrElse(name,
+          sys.error(s"unknown query: $name"))
+      }
+      val spark = GraftSession.start()
+      if (mode == "plan") plan(spark, sfDir, queries)
+      else jobs(spark, sfDir, queries)
+      spark.stop()
+    case _ =>
+      System.err.println("usage: graft.Profile plan|jobs <sfDir> [query ...] | decode")
+      sys.exit(2)
+  }
+
+  private type Query = (String, (SparkSession, String) => DataFrame)
+
+  private def plan(spark: SparkSession, sfDir: String,
+      queries: Seq[Query]): Unit = {
+    spark.range(100000).selectExpr("sum(id)").collect() // codegen warm
+    queries.foreach { case (name, fn) =>
+      println(s"\n===== $name =====")
+      fn(spark, sfDir).explain("formatted")
+      (1 to 2).foreach { i =>
+        val t0 = System.nanoTime()
+        val n = fn(spark, sfDir).count()
+        println(f"run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
+      }
+    }
+  }
+
+  private def jobs(spark: SparkSession, sfDir: String,
+      queries: Seq[Query]): Unit = {
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRec]()
     // per-stage-name aggregation of task metrics: the sandbox's stand-in
     // for the UI's Stages tab (executor time, shuffle bytes, input bytes)
@@ -87,9 +107,7 @@ object Profile {
       }
     })
     spark.range(100000).selectExpr("sum(id)").collect() // codegen warm
-    names.foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query: $name"))
+    queries.foreach { case (name, fn) =>
       (1 to 2).foreach { pass =>
         jobs.clear(); stages.clear(); stageNames.clear()
         val t0 = System.nanoTime()
@@ -147,6 +165,28 @@ object Profile {
         }
       }
     }
-    spark.stop()
+  }
+
+  private def decode(spark: SparkSession): Unit = {
+    val work = java.nio.file.Files.createTempDirectory("decbench").toString
+    val cat = new graft.catalog.TableCatalog(spark, work)
+    val df = spark.range(4000000L).select(col("id").as("k"),
+      (col("id") * 2.5).as("x"), (col("id") % 1000).cast("long").as("g"),
+      concat(lit("value_"), col("id")).as("sv"))
+    cat.overwrite("D.S.DEC", df.repartition(8))
+    cat.deleteWhereDV("D.S.DEC", col("k") % 101 === 0)
+    def rd(columnar: Boolean) = spark.read.format("graft")
+      .option("root", work).option("table", "D.S.DEC")
+      .option("columnar", columnar.toString).load()
+    def run(c: Boolean): Double = {
+      val t0 = System.nanoTime()
+      rd(c).agg(sum("k"), sum("x"), sum("g"), sum(length(col("sv"))))
+        .collect()
+      (System.nanoTime() - t0) / 1e9
+    }
+    run(c = true); run(c = false) // warm both paths
+    val cols = (1 to 3).map(_ => run(c = true)).min
+    val rows = (1 to 3).map(_ => run(c = false)).min
+    println(f"DECODE_DV columnar=$cols%.2fs row=$rows%.2fs win=${rows / cols}%.2fx")
   }
 }

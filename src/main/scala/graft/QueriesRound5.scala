@@ -76,9 +76,7 @@ object QueriesRound5 {
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-      val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      GraftSession.withConf(s, confs: _*) {
         val li = table(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
         val ord = table(s, dir, "orders")
@@ -98,9 +96,6 @@ object QueriesRound5 {
         s.createDataFrame(java.util.Arrays.asList(rows: _*), agg.schema)
           .withColumn("bloom_pruned",
             lit(plan.contains("might_contain") || plan.contains("bloomfilter")))
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     }),
 

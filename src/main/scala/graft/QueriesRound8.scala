@@ -14,6 +14,13 @@ import Queries.table
   * [[QueriesRound8.oracles]]. */
 object QueriesRound8 {
 
+  /** Storage-partitioned joins: DSv2 bucketing on, the connector keeps
+    * its data grouping, and no broadcast to plan around it. */
+  private val spjConfs = Seq(
+    "spark.sql.sources.v2.bucketing.enabled" -> "true",
+    "spark.graft.preserveDataGrouping" -> "true",
+    "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ---- streaming ADMISSION CONTROL (SupportsAdmissionControl +
@@ -84,11 +91,8 @@ object QueriesRound8 {
       // deliberately spreads tiny files across idle cores)
       cat.overwrite("D.S.SIZTINY",
         li.filter(col("l_orderkey") % 50 === 0).repartition(64)) // 64 tiny
-      val keys = Seq("spark.sql.files.maxPartitionBytes",
-        "spark.sql.files.openCostInBytes")
-      val olds = keys.map(k => k -> s.conf.getOption(k))
-      s.conf.set(keys(0), "262144"); s.conf.set(keys(1), "16")
-      try {
+      GraftSession.withConf(s, "spark.sql.files.maxPartitionBytes" -> "262144",
+          "spark.sql.files.openCostInBytes" -> "16") {
         def rd(t: String) = s.read.format("graft")
           .option("root", work).option("table", t).load()
         val big = rd("D.S.SIZBIG").agg(count(lit(1)).as("n"),
@@ -106,9 +110,6 @@ object QueriesRound8 {
         Seq((rBig.getLong(0), rBig.getDouble(1), bigSplit,
             rTiny.getLong(0), tinySlices == 64 && tinyTasks < 64))
           .toDF("n", "sum_qty", "big_split", "n_tiny", "tiny_packed")
-      } finally olds.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
       }
     }),
 
@@ -199,13 +200,7 @@ object QueriesRound8 {
       cat.overwritePartitioned("D.S.SPJDIM",
         li.groupBy("l_returnflag").agg(count(lit(1)).as("flag_rows"))
           .repartition(col("l_returnflag")), Seq("l_returnflag"))
-      val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
-        "spark.graft.preserveDataGrouping",
-        "spark.sql.autoBroadcastJoinThreshold")
-      val olds = keys.map(k => k -> s.conf.getOption(k))
-      s.conf.set(keys(0), "true"); s.conf.set(keys(1), "true")
-      s.conf.set(keys(2), "-1")
-      try {
+      GraftSession.withConf(s, spjConfs: _*) {
         def rd(t: String) = s.read.format("graft")
           .option("root", work).option("table", t).load()
         val j = rd("D.S.SPJFACT").join(rd("D.S.SPJDIM"), "l_returnflag")
@@ -219,9 +214,6 @@ object QueriesRound8 {
         s.createDataFrame(s.sparkContext.parallelize(rows.toIndexedSeq, 1),
             agg.schema)
           .withColumn("zero_shuffle", lit(zeroShuffle))
-      } finally olds.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
       }
     }),
 
@@ -251,13 +243,7 @@ object QueriesRound8 {
       val cname = "gbkt_" + work.replaceAll("[^A-Za-z0-9]", "").takeRight(12)
       s.conf.set(s"spark.sql.catalog.$cname", "graft.connector.GraftCatalog")
       s.conf.set(s"spark.sql.catalog.$cname.root", work)
-      val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
-        "spark.graft.preserveDataGrouping",
-        "spark.sql.autoBroadcastJoinThreshold")
-      val olds = keys.map(k => k -> s.conf.getOption(k))
-      s.conf.set(keys(0), "true"); s.conf.set(keys(1), "true")
-      s.conf.set(keys(2), "-1")
-      try {
+      GraftSession.withConf(s, spjConfs: _*) {
         def rd(t: String) = s.read.table(s"$cname.D.S.$t")
         val j = rd("BKTFACT")
           .join(rd("BKTDIM"), col("l_orderkey") === col("o_orderkey"))
@@ -279,9 +265,6 @@ object QueriesRound8 {
             agg.schema)
           .withColumn("zero_shuffle", lit(zeroShuffle))
           .withColumn("bucket_pruned", lit(pruned))
-      } finally olds.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
       }
     }),
 
@@ -308,13 +291,7 @@ object QueriesRound8 {
       val cname = "gcomp_" + work.replaceAll("[^A-Za-z0-9]", "").takeRight(12)
       s.conf.set(s"spark.sql.catalog.$cname", "graft.connector.GraftCatalog")
       s.conf.set(s"spark.sql.catalog.$cname.root", work)
-      val keys = Seq("spark.sql.sources.v2.bucketing.enabled",
-        "spark.graft.preserveDataGrouping",
-        "spark.sql.autoBroadcastJoinThreshold")
-      val olds = keys.map(k => k -> s.conf.getOption(k))
-      s.conf.set(keys(0), "true"); s.conf.set(keys(1), "true")
-      s.conf.set(keys(2), "-1")
-      try {
+      GraftSession.withConf(s, spjConfs: _*) {
         def rd(t: String) = s.read.table(s"$cname.D.S.$t")
         val j = rd("COMPFACT").join(rd("COMPDIM"),
           col("o_orderpriority") === col("rprio") &&
@@ -340,9 +317,6 @@ object QueriesRound8 {
             agg.schema)
           .withColumn("zero_shuffle", lit(zeroShuffle))
           .withColumn("composed_prune", lit(composedPrune))
-      } finally olds.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
       }
     }),
 

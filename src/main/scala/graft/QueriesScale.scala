@@ -374,9 +374,7 @@ object QueriesScale {
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> thr.toString,
         "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-      val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
-      confs.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
+      GraftSession.withConf(s, confs: _*) {
         val e = events(s, dir)
         // hot key 1 (an existing customer): every 3rd event remaps to
         // it, then replicates 8× — a planted power-law key. The
@@ -414,9 +412,6 @@ object QueriesScale {
           .split("== Initial Plan ==").head
         s.createDataFrame(java.util.Arrays.asList(rows: _*), agg.schema)
           .withColumn("skew_split", lit(finalPlan.contains("skew=true")))
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
       }
     }))
 }

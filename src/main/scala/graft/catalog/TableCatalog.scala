@@ -1078,16 +1078,10 @@ class TableCatalog(spark: SparkSession, root: String,
     * writers emit no usable min/max for it), which would exclude
     * timestamp columns — the most common 100 TB range predicate — from
     * `_STATS` file skipping. Session conf is restored after the
-    * write. */
-  private def withMicrosTimestamps[T](body: => T): T = {
-    val key = "spark.sql.parquet.outputTimestampType"
-    val old = spark.conf.getOption(key)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    try body finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
+    * write; concurrent commits on one session share the override. */
+  private def withMicrosTimestamps[T](body: => T): T =
+    graft.GraftSession.withConf(spark,
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")(body)
 
   private def commitClaimed(fq: String, next: Int, dir: Path,
       write: Path => Unit, verifyOwner: () => Unit = () => ()): Unit = {

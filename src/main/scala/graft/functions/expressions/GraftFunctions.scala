@@ -140,7 +140,7 @@ object GraftFunctions {
 }
 
 /** Session-extension wiring: injects the native functions at session
-  * build time (`SparkSession.builder().withExtensions(new
+  * build time (the session builder's `withExtensions(new
   * GraftExtensions)`), the deployment-grade alternative to per-session
   * temp registration. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

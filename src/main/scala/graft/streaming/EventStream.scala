@@ -179,9 +179,8 @@ object EventStream {
         (id, new java.sql.Timestamp(maxTs.getTime + offsetSec * 1000L),
           uid, typ, 0.0, "{}")
       }.toDF(cols: _*).coalesce(1).write.mode("append").parquet(scratch)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try Tuning.withLeanCheckpoints(spark) {
+    Tuning.withLeanCheckpoints(spark,
+        "spark.sql.shuffle.partitions" -> statePartitions.toString) {
       val q = purchaseClickLeftOuter(spark, scratch, glob = "*.parquet")
         .writeStream.outputMode("append").format("memory")
         .queryName(queryName).start()
@@ -193,7 +192,7 @@ object EventStream {
         tail(Seq((-3L, 7202L, 999998L, "noop")))
         q.processAllAvailable()
       } finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     spark.table(queryName).filter(col("user_id") < maxUser)
   }
 
@@ -213,9 +212,8 @@ object EventStream {
   def runDedupWithinWatermark(spark: SparkSession, dir: String,
       queryName: String = "graft_stream_ddw",
       statePartitions: Int = 8): DataFrame = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try Tuning.withLeanCheckpoints(spark) {
+    Tuning.withLeanCheckpoints(spark,
+        "spark.sql.shuffle.partitions" -> statePartitions.toString) {
       val q = readStream(spark, dir)
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
@@ -223,7 +221,7 @@ object EventStream {
         .writeStream.outputMode("append").format("memory")
         .queryName(queryName).start()
       try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     spark.table(queryName)
       .groupBy(col("user_id"), col("event_type"))
       .agg(count(lit(1)).as("n_emitted"))
@@ -259,9 +257,8 @@ object EventStream {
     val maxTs = e.agg(max(col("ts"))).head().getTimestamp(0)
     require(maxTs != null,
       s"runDedupThenSessions: no events with user_id < $maxUser in $dir")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try Tuning.withLeanCheckpoints(spark) {
+    Tuning.withLeanCheckpoints(spark,
+        "spark.sql.shuffle.partitions" -> statePartitions.toString) {
       val q = readStream(spark, scratch, glob = "*.parquet")
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id")
@@ -282,7 +279,7 @@ object EventStream {
           .toDF(cols: _*).coalesce(1).write.mode("append").parquet(scratch)
         q.processAllAvailable()
       } finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     spark.table(queryName).filter(col("user_id") < maxUser)
   }
 
@@ -306,9 +303,8 @@ object EventStream {
     e.write.mode("append").parquet(scratch)
     val maxTs = e.agg(max(col("ts"))).head().getTimestamp(0)
     require(maxTs != null, s"runChainedWindows: no events in $dir")
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try Tuning.withLeanCheckpoints(spark) {
+    Tuning.withLeanCheckpoints(spark,
+        "spark.sql.shuffle.partitions" -> statePartitions.toString) {
       val q = readStream(spark, scratch, glob = "*.parquet")
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
@@ -329,7 +325,7 @@ object EventStream {
           .toDF(cols: _*).coalesce(1).write.mode("append").parquet(scratch)
         q.processAllAvailable()
       } finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     spark.table(queryName).filter(col("event_type") =!= "noop")
   }
 
@@ -338,9 +334,8 @@ object EventStream {
   def runPurchaseClickJoin(spark: SparkSession, dir: String,
       queryName: String = "graft_stream_join",
       statePartitions: Int = 8): DataFrame = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try Tuning.withLeanCheckpoints(spark) {
+    Tuning.withLeanCheckpoints(spark,
+        "spark.sql.shuffle.partitions" -> statePartitions.toString) {
       val q = purchaseClickJoin(spark, dir)
         .writeStream
         .outputMode("append")
@@ -348,7 +343,7 @@ object EventStream {
         .queryName(queryName)
         .start()
       try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     spark.table(queryName)
   }
 
@@ -357,9 +352,8 @@ object EventStream {
   def runSessionsToCompletion(spark: SparkSession, dir: String,
       queryName: String = "graft_stream_sessions",
       statePartitions: Int = 8): DataFrame = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try Tuning.withLeanCheckpoints(spark) {
+    Tuning.withLeanCheckpoints(spark,
+        "spark.sql.shuffle.partitions" -> statePartitions.toString) {
       val q = sessionAgg(readStream(spark, dir))
         .writeStream
         .outputMode("complete")
@@ -367,7 +361,7 @@ object EventStream {
         .queryName(queryName)
         .start()
       try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     spark.table(queryName)
   }
 
@@ -382,9 +376,8 @@ object EventStream {
     // query start and every partition pays a delta+commit file per
     // micro-batch; size it to the state (hour×type cardinality), not
     // to the session's scan parallelism.
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try Tuning.withLeanCheckpoints(spark) {
+    Tuning.withLeanCheckpoints(spark,
+        "spark.sql.shuffle.partitions" -> statePartitions.toString) {
       val q = hourlyAgg(readStream(spark, dir))
         .writeStream
         .outputMode("complete")
@@ -392,7 +385,7 @@ object EventStream {
         .queryName(queryName)
         .start()
       try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     spark.table(queryName)
   }
 }

@@ -76,12 +76,9 @@ object StatefulCounters {
     e.filter(col("seq") % 2 === 0).write.mode("append").parquet(scratch)
     val rocks =
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    val touched = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.streaming.stateStore.providerClass")
-    val saved = touched.map(k => k -> spark.conf.getOption(k)).toMap
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", rocks)
-    try Tuning.withLeanCheckpoints(spark) {
+    Tuning.withLeanCheckpoints(spark,
+        "spark.sql.shuffle.partitions" -> statePartitions.toString,
+        "spark.sql.streaming.stateStore.providerClass" -> rocks) {
       import spark.implicits._
       val src = spark.readStream
         .schema(Encoders.product[Tick].schema)
@@ -95,9 +92,6 @@ object StatefulCounters {
         e.filter(col("seq") % 2 === 1).write.mode("append").parquet(scratch)
         q.processAllAvailable()
       } finally q.stop()
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
     spark.table(queryName)
       .groupBy(col("key"))
@@ -113,12 +107,9 @@ object StatefulCounters {
     import spark.implicits._
     val rocks =
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    val touched = Seq("spark.sql.shuffle.partitions",
-      "spark.sql.streaming.stateStore.providerClass")
-    val saved = touched.map(k => k -> spark.conf.getOption(k)).toMap
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", rocks)
-    try Tuning.withLeanCheckpoints(spark) {
+    Tuning.withLeanCheckpoints(spark,
+        "spark.sql.shuffle.partitions" -> statePartitions.toString,
+        "spark.sql.streaming.stateStore.providerClass" -> rocks) {
       val src = spark.readStream
         .schema(Encoders.product[Tick].schema)
         .parquet(inputDir)
@@ -131,9 +122,6 @@ object StatefulCounters {
         .queryName(queryName)
         .start()
       try q.processAllAvailable() finally q.stop()
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
     spark.table(queryName)
   }

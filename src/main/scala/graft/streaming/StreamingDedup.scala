@@ -58,9 +58,8 @@ object StreamingDedup {
     // Size state-store partitioning to the key space, not the scan
     // parallelism — each partition writes a delta+commit file per
     // micro-batch (see EventStream.runHourlyToCompletion).
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    try Tuning.withLeanCheckpoints(spark) {
+    Tuning.withLeanCheckpoints(spark,
+        "spark.sql.shuffle.partitions" -> statePartitions.toString) {
       val src = spark.readStream
         .schema(org.apache.spark.sql.Encoders.product[Keyed].schema)
         .parquet(inputDir)
@@ -73,7 +72,7 @@ object StreamingDedup {
         .queryName(queryName)
         .start()
       try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    }
     spark.table(queryName)
   }
 }

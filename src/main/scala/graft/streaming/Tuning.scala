@@ -20,27 +20,19 @@ import org.apache.spark.sql.SparkSession
   * (HDFS CRC32C; local page cache + device CRC), so the sidecar is
   * redundant there; on object stores without read-after-write
   * integrity it is worth its cost. The helper therefore disables it
-  * scoped to the drain UNLESS the session/env overrides —
-  * `graft.streaming.checkpointChecksum=true` (or env
-  * GRAFT_STREAM_CHECKSUM=true) restores the Spark default, which is
-  * the right production setting for S3-style checkpoint locations. */
+  * scoped to the drain UNLESS the session sets
+  * `graft.streaming.checkpointChecksum=true`, which restores the Spark
+  * default — the right production setting for S3-style checkpoint
+  * locations. */
 object Tuning {
 
-  private val Key = "spark.sql.streaming.checkpoint.fileChecksum.enabled"
-
   /** Run `body` with lean checkpoint IO (checksum sidecars off unless
-    * overridden), restoring the previous session value afterwards. */
-  def withLeanCheckpoints[T](spark: SparkSession)(body: => T): T = {
-    val want =
-      sys.env.get("GRAFT_STREAM_CHECKSUM")
-        .orElse(spark.conf.getOption("graft.streaming.checkpointChecksum"))
-        .getOrElse("false")
-    val prev = spark.conf.getOption(Key)
-    spark.conf.set(Key, want)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(Key, v)
-      case None => spark.conf.unset(Key)
-    }
-  }
+    * overridden) and the extra `confs`, restoring the previous session
+    * values afterwards. */
+  def withLeanCheckpoints[T](spark: SparkSession, confs: (String, String)*)(
+      body: => T): T =
+    graft.GraftSession.withConf(spark,
+      ("spark.sql.streaming.checkpoint.fileChecksum.enabled" ->
+        spark.conf.get("graft.streaming.checkpointChecksum", "false")) +:
+        confs: _*)(body)
 }

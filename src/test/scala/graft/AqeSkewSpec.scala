@@ -21,9 +21,7 @@ class AqeSkewSpec extends SparkTestBase {
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "32KB",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    GraftSession.withConf(spark, confs: _*) {
       // key 0 carries 100k rows with fat payloads; 99 other keys are tiny
       val skewed = spark.range(110000)
         .select(when($"id" < 100000, 0L).otherwise($"id" % 100).as("k"),
@@ -42,9 +40,6 @@ class AqeSkewSpec extends SparkTestBase {
       }
       assert(finalPlan.contains("skew=true"),
         s"expected a skew-split join in:\n$finalPlan")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -24,19 +24,15 @@ class BucketedJoinSpec extends SparkTestBase {
       .mode("overwrite").saveAsTable("b_lines")
 
     // force a non-broadcast join so the exchange question is real
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try GraftSession.withConf(spark,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.enabled" -> "false") {
       val j = spark.table("b_orders").join(spark.table("b_lines"), "key")
       val plan = j.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning"),
         s"bucketed join should not shuffle:\n$plan")
       assert(j.count() == 3000)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.sql("DROP TABLE IF EXISTS b_orders")
       spark.sql("DROP TABLE IF EXISTS b_lines")
     }

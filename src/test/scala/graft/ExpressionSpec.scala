@@ -139,9 +139,7 @@ class ExpressionSpec extends SparkTestBase {
     // the kernels' locals land in one Java scope — freshName must keep
     // them distinct. fallback=false turns a Janino failure into an
     // error instead of silent interpreted execution.
-    val prev = spark.conf.getOption("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    GraftSession.withConf(spark, "spark.sql.codegen.fallback" -> "false") {
       // array(lit…) children are NON-nullable — the collision-prone path
       val a = array(lit(1.0f), lit(2.0f))
       val b = array(lit(3.0f), lit(4.0f))
@@ -152,9 +150,6 @@ class ExpressionSpec extends SparkTestBase {
       val row = df.collect().head
       assert(math.abs(row.getDouble(0) - 11.0 / math.sqrt(5.0 * 25.0)) < 1e-12)
       assert(row.getLong(1) == 1100000000000000L) // (1e7·3e7)+(2e7·4e7)
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
-      case None => spark.conf.unset("spark.sql.codegen.fallback")
     }
   }
 
@@ -193,9 +188,7 @@ class ExpressionSpec extends SparkTestBase {
 
   test("string kernels run codegen'd inside a dataframe") {
     GraftFunctions.register(spark)
-    val prev = spark.conf.getOption("spark.sql.codegen.fallback")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    GraftSession.withConf(spark, "spark.sql.codegen.fallback" -> "false") {
       val df = Seq(("CA", "ABC"), ("kitten", "sitting"), (null, "x"))
         .toDF("a", "b")
       val rows = df.select(
@@ -207,9 +200,6 @@ class ExpressionSpec extends SparkTestBase {
       assert(rows(0).getInt(0) == 2 && rows(1).getInt(0) == 3)
       assert(rows(2).isNullAt(0) && rows(2).isNullAt(1)) // null propagates
       assert(rows(0).getString(2) == "eta")
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.codegen.fallback", v)
-      case None => spark.conf.unset("spark.sql.codegen.fallback")
     }
   }
 }

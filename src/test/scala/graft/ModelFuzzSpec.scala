@@ -172,8 +172,7 @@ class ModelFuzzSpec extends SparkTestBase {
     }
 
     // ---- run ----
-    spark.conf.set("graft.flatCheckpointInterval", "4")
-    try {
+    GraftSession.withConf(spark, "graft.flatCheckpointInterval" -> "4") {
       val init = freshRows(6)
       cat.overwrite(t, frame(init, qtyAsLong = false))
       init.foreach(r => model(r.id) = r)
@@ -307,7 +306,7 @@ class ModelFuzzSpec extends SparkTestBase {
       }
       validate(nOps)
       validateFeed(nOps)
-    } finally spark.conf.unset("graft.flatCheckpointInterval")
+    }
   }
   // scalastyle:on method.length cyclomatic.complexity
 

@@ -55,8 +55,7 @@ class Round11Spec extends SparkTestBase {
     val root = tempDir("r11_ckpt")
     val cat = new TableCatalog(spark, root)
     val t = "D.S.CKPT"
-    spark.conf.set("graft.flatCheckpointInterval", "4")
-    try {
+    GraftSession.withConf(spark, "graft.flatCheckpointInterval" -> "4") {
       cat.overwrite(t, (1L to 10L).map(i => (i, 0L)).toDF("k", "b")) // v0
       (1 to 6).foreach(b => cat.append(t, // v1..v6 (v4 = checkpoint)
         (1L to 10L).map(i => (i, b.toLong)).toDF("k", "b")))
@@ -89,7 +88,7 @@ class Round11Spec extends SparkTestBase {
         s"fully-retired pre-checkpoint dir must be reclaimed ($removed)")
       assert(cat.read(t).count() == 61L, "post-vacuum read intact")
       assert(cat.read(t).filter(col("b") === 3L).count() == 10L)
-    } finally spark.conf.unset("graft.flatCheckpointInterval")
+    }
   }
 
   private def rootCause(t: Throwable): String = {
@@ -398,8 +397,7 @@ class Round11Spec extends SparkTestBase {
     val root = tempDir("r11_ckptcdf")
     val cat = new TableCatalog(spark, root)
     val t = "D.S.CKCDF"
-    spark.conf.set("graft.flatCheckpointInterval", "4")
-    try {
+    GraftSession.withConf(spark, "graft.flatCheckpointInterval" -> "4") {
       cat.overwrite(t, Seq((0L, 0L)).toDF("k", "b")) // v0
       (1 to 9).foreach(b => cat.append(t, // v1..v9: checkpoints at v4, v8
         Seq((b.toLong, b.toLong)).toDF("k", "b")))
@@ -429,7 +427,7 @@ class Round11Spec extends SparkTestBase {
       val total = { var s = 0L; val it = sizes.iterator()
         while (it.hasNext) s += it.next(); s }
       assert(total == 10L, s"snapshot batch must deliver all rows ($total)")
-    } finally spark.conf.unset("graft.flatCheckpointInterval")
+    }
   }
 
   test("crash recovery clears a died ALTER's orphan _SCHEMAS action") {

@@ -58,10 +58,10 @@ class Round12Spec extends SparkTestBase {
   test("DROP NOT NULL resolves the constraint by physical column " +
       "after a rename; SET NOT NULL does not stack a duplicate") {
     val root = tempDir("r12_nnren")
-    spark.conf.set("spark.sql.catalog.gc_r12nn", "graft.connector.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gc_r12nn.root", root)
     val cat = new TableCatalog(spark, root)
-    try {
+    GraftSession.withConf(spark,
+        "spark.sql.catalog.gc_r12nn" -> "graft.connector.GraftCatalog",
+        "spark.sql.catalog.gc_r12nn.root" -> root) {
       spark.sql("CREATE TABLE gc_r12nn.d.s.nnren (id BIGINT, em STRING) USING graft")
       spark.sql("INSERT INTO gc_r12nn.d.s.nnren VALUES (1, 'a'), (2, 'b')")
       val t = "d.s.nnren"
@@ -87,7 +87,7 @@ class Round12Spec extends SparkTestBase {
       assert(spark.sql(
         "SELECT count(*) FROM gc_r12nn.d.s.nnren WHERE email IS NULL")
         .collect()(0).getLong(0) == 1)
-    } finally spark.conf.unset("spark.sql.catalog.gc_r12nn")
+    }
   }
 
   // ---- constraints × data overwrite --------------------------------------
@@ -123,10 +123,10 @@ class Round12Spec extends SparkTestBase {
   test("INSERT OVERWRITE keeps constraints and rejects violating " +
       "replacement rows; REPLACE TABLE drops them (SQL path)") {
     val root = tempDir("r12_sqlov")
-    spark.conf.set("spark.sql.catalog.gc_r12ov", "graft.connector.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gc_r12ov.root", root)
     val cat = new TableCatalog(spark, root)
-    try {
+    GraftSession.withConf(spark,
+        "spark.sql.catalog.gc_r12ov" -> "graft.connector.GraftCatalog",
+        "spark.sql.catalog.gc_r12ov.root" -> root) {
       spark.sql("CREATE TABLE gc_r12ov.d.s.ov (id BIGINT, price DOUBLE) USING graft")
       spark.sql("INSERT INTO gc_r12ov.d.s.ov VALUES (1, 10.0)")
       spark.sql("ALTER TABLE gc_r12ov.d.s.ov ADD CONSTRAINT pp CHECK (price >= 0)")
@@ -149,7 +149,7 @@ class Round12Spec extends SparkTestBase {
       spark.sql("INSERT INTO gc_r12ov.d.s.ov VALUES (6, -1.0)") // now fine
       assert(spark.sql("SELECT count(*) FROM gc_r12ov.d.s.ov")
         .collect()(0).getLong(0) == 2)
-    } finally spark.conf.unset("spark.sql.catalog.gc_r12ov")
+    }
   }
 
   test("overwrite whose schema cannot satisfy a surviving constraint " +
@@ -330,8 +330,7 @@ class Round12Spec extends SparkTestBase {
     // eager mode (grace 0): the same sequence reclaims the retired
     // chains at the second-next commit, keeping exactly one back —
     // the pinned read fails LOUDLY, never silently wrong
-    spark.conf.set("graft.reclaimGraceMs", "0")
-    try {
+    GraftSession.withConf(spark, "graft.reclaimGraceMs" -> "0") {
       val t2 = "D.S.GRACE0"
       cat.overwrite(t2, Seq((1L, "a")).toDF("id", "v")) // v0
       cat.overwrite(t2, Seq((2L, "b")).toDF("id", "v")) // v1
@@ -342,7 +341,7 @@ class Round12Spec extends SparkTestBase {
       intercept[Exception] { cat.readVersion(t2, 0).collect() }
       // the kept-back predecessor still reads
       assert(cat.readVersion(t2, 2).count() == 1)
-    } finally spark.conf.unset("graft.reclaimGraceMs")
+    }
   }
 
   // ---- DSv2 decimal write --------------------------------------------------
@@ -350,9 +349,9 @@ class Round12Spec extends SparkTestBase {
   test("DSv2 writer round-trips decimals across all three parquet " +
       "encodings (int32 / int64 / fixed-len byte array)") {
     val root = tempDir("r12_dec")
-    spark.conf.set("spark.sql.catalog.gc_r12dec", "graft.connector.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gc_r12dec.root", root)
-    try {
+    GraftSession.withConf(spark,
+        "spark.sql.catalog.gc_r12dec" -> "graft.connector.GraftCatalog",
+        "spark.sql.catalog.gc_r12dec.root" -> root) {
       // RTAS with a decimal literal — the case that used to throw
       // "unsupported type DecimalType"
       spark.sql("CREATE TABLE gc_r12dec.d.s.dec USING graft AS " +
@@ -377,7 +376,7 @@ class Round12Spec extends SparkTestBase {
       // row-based (non-columnar) read path decodes the same values
       check(spark.read.format("graft").option("root", root)
         .option("table", "d.s.dec").option("columnar", "false").load())
-    } finally spark.conf.unset("spark.sql.catalog.gc_r12dec")
+    }
   }
 
   // ---- timestampAsOf reader ergonomics ------------------------------------
@@ -414,10 +413,10 @@ class Round12Spec extends SparkTestBase {
   test("CREATE TABLE with an inline CHECK commits the constraint " +
       "atomically with v0 (single version, enforced from birth)") {
     val root = tempDir("r12_atomic")
-    spark.conf.set("spark.sql.catalog.gc_r12at", "graft.connector.GraftCatalog")
-    spark.conf.set("spark.sql.catalog.gc_r12at.root", root)
     val cat = new TableCatalog(spark, root)
-    try {
+    GraftSession.withConf(spark,
+        "spark.sql.catalog.gc_r12at" -> "graft.connector.GraftCatalog",
+        "spark.sql.catalog.gc_r12at.root" -> root) {
       spark.sql("CREATE TABLE gc_r12at.d.s.at " +
         "(id BIGINT, price DOUBLE, CONSTRAINT pp CHECK (price >= 0)) USING graft")
       val t = "d.s.at"
@@ -437,6 +436,6 @@ class Round12Spec extends SparkTestBase {
           "(id BIGINT, CONSTRAINT nope CHECK (missing_col > 0)) USING graft")
       }
       assert(!cat.exists("d.s.bad"))
-    } finally spark.conf.unset("spark.sql.catalog.gc_r12at")
+    }
   }
 }

@@ -264,13 +264,9 @@ class Round4OpsSpec extends SparkTestBase {
     // sides too big to broadcast, Spark builds a bloom filter from the
     // selective dim side and injects a might_contain prefilter into
     // the probe scan — rows drop before the shuffle, not after it.
-    val touched = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val saved = touched.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      spark.conf.set(touched.head, "0")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    GraftSession.withConf(spark,
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val dir = "/root/testdata/sf0.001"
       val li = spark.read.parquet(s"$dir/lineitem.parquet")
         .select(col("l_orderkey"), col("l_quantity"))
@@ -283,9 +279,6 @@ class Round4OpsSpec extends SparkTestBase {
       val plan = joined.queryExecution.executedPlan.toString
         .split("== Initial Plan ==").head
       assert(plan.contains("might_contain"), s"no runtime bloom:\n$plan")
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -235,7 +235,7 @@ class Round8Spec extends SparkTestBase {
       else hc.set("parquet.block.size", oldBlock)
     }
     assert(cat.dataFilePaths(t).size == 1)
-    withConf("spark.sql.files.maxPartitionBytes" -> "262144",
+    GraftSession.withConf(spark, "spark.sql.files.maxPartitionBytes" -> "262144",
         "spark.sql.files.openCostInBytes" -> "16") {
       val rd = graftRead(root, t)
       val agg = rd.agg(count(lit(1)).as("n"), sum("k").as("s"))
@@ -253,7 +253,7 @@ class Round8Spec extends SparkTestBase {
     val t = "D.S.PACK"
     cat.overwrite(t, (1L to 2000L).toDF("k").repartition(20)) // 20 tiny files
     assert(cat.dataFilePaths(t).size == 20)
-    withConf("spark.sql.files.openCostInBytes" -> "16") {
+    GraftSession.withConf(spark, "spark.sql.files.openCostInBytes" -> "16") {
       val rd = graftRead(root, t)
       val agg = rd.agg(count(lit(1)).as("n"), sum("k").as("s"))
       val r = agg.collect()(0)
@@ -272,7 +272,7 @@ class Round8Spec extends SparkTestBase {
     cat.overwrite(t, (1L to 10000L).map(i => (i, i * 2.5, s"v$i"))
       .toDF("k", "x", "s").repartition(12))
     cat.deleteWhereDV(t, col("k") % 7 === 0)
-    withConf("spark.sql.files.openCostInBytes" -> "16") {
+    GraftSession.withConf(spark, "spark.sql.files.openCostInBytes" -> "16") {
       val rd = graftRead(root, t)
       val agg = rd.agg(count(lit(1)).as("n"), sum("k").as("sk"),
         sum("x").as("sx"))
@@ -332,15 +332,6 @@ class Round8Spec extends SparkTestBase {
     assert(cat.readVersion(t, 18).count() == 19)
   }
 
-  private def withConf(kvs: (String, String)*)(body: => Unit): Unit = {
-    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   // ---- partitioned streaming sink -----------------------------------------
 
   test("streaming sink writes hive-partitioned tables, exactly once") {
@@ -390,7 +381,7 @@ class Round8Spec extends SparkTestBase {
     val dim = (0 until 8).map(i => (i, s"name_$i")).toDF("p", "pname")
     cat.overwritePartitioned("D.S.SPJF", fact.repartition(col("p")), Seq("p"))
     cat.overwritePartitioned("D.S.SPJD", dim.repartition(col("p")), Seq("p"))
-    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+    GraftSession.withConf(spark, "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.graft.preserveDataGrouping" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val a = graftRead(root, "D.S.SPJF")
@@ -415,7 +406,7 @@ class Round8Spec extends SparkTestBase {
     // without the grouping opt-in (and packing defeated so each side
     // really has many partitions), the same join shuffles — SPJ was
     // the difference
-    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1",
+    GraftSession.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1",
         "spark.sql.files.maxPartitionBytes" -> "1",
         "spark.sql.files.openCostInBytes" -> "0") {
       val j2 = graftRead(root, "D.S.SPJF").join(graftRead(root, "D.S.SPJD"), "p")
@@ -436,7 +427,7 @@ class Round8Spec extends SparkTestBase {
     cat.overwritePartitioned("D.S.SKF",
       fact.repartition(col("p"), pmod(col("k"), lit(16))), Seq("p"))
     cat.overwritePartitioned("D.S.SKD", dim.repartition(col("p")), Seq("p"))
-    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+    GraftSession.withConf(spark, "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.graft.preserveDataGrouping" -> "true",
         "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
         "spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled" -> "true",
@@ -477,7 +468,7 @@ class Round8Spec extends SparkTestBase {
     assert(!cat.read("d.s.bf").columns.contains("gbucket"))
     spark.conf.set("spark.sql.catalog.gc_bkt", "graft.connector.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gc_bkt.root", root)
-    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+    GraftSession.withConf(spark, "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.graft.preserveDataGrouping" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = spark.sql(
@@ -592,7 +583,7 @@ class Round8Spec extends SparkTestBase {
       .head().getLong(0) == 200)
     // epoch files landed bucketed, same hash as every other writer
     assert(cat.dataFilePaths("d.s.bs").forall(_.contains("/gbucket=")))
-    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+    GraftSession.withConf(spark, "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.graft.preserveDataGrouping" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       cat.overwriteBucketed("d.s.bsdim",
@@ -642,7 +633,7 @@ class Round8Spec extends SparkTestBase {
     // the dim side is a PLAIN relation (no graft layout at all)
     (1L to 2000L by 4).map(i => (i, s"d_$i")).toDF("dk", "dname")
       .createOrReplaceTempView("os_dim")
-    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+    GraftSession.withConf(spark, "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.graft.preserveDataGrouping" -> "true",
         "spark.sql.sources.v2.bucketing.shuffle.enabled" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
@@ -701,7 +692,7 @@ class Round8Spec extends SparkTestBase {
     // routing hashes are bit-for-bit identical, so SPJ composes
     cat.overwriteBucketed("d.s.sbdim",
       (1L to 400L by 4).map(i => (i, s"d_$i")).toDF("dk", "dname"), "dk", 4)
-    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+    GraftSession.withConf(spark, "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.graft.preserveDataGrouping" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = spark.sql(
@@ -762,7 +753,7 @@ class Round8Spec extends SparkTestBase {
     assert(!cat.read("d.s.cf").columns.contains("gbucket"))
     spark.conf.set("spark.sql.catalog.gc_comp", "graft.connector.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gc_comp.root", root)
-    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+    GraftSession.withConf(spark, "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.graft.preserveDataGrouping" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // join on BOTH layout levels: zero exchange on either side
@@ -837,7 +828,7 @@ class Round8Spec extends SparkTestBase {
     assert(pointScan(41L) < total, "point lookup must open one bucket")
     spark.conf.set("spark.sql.catalog.gc_blife", "graft.connector.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gc_blife.root", root)
-    withConf("spark.sql.sources.v2.bucketing.enabled" -> "true",
+    GraftSession.withConf(spark, "spark.sql.sources.v2.bucketing.enabled" -> "true",
         "spark.graft.preserveDataGrouping" -> "true",
         "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val j = spark.sql(
